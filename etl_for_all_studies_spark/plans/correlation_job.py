@@ -65,22 +65,19 @@ def run_correlation_job(
         logger.warning("Warehouse has no expression data; nothing to do")
         return CorrelationJobResult([], list(accessions or []), {}, time.monotonic() - t0)
 
-    # O-7b: studies that actually have expression facts (left-semi), ordered.
+    # O-7b: studies that actually have expression facts (left-semi), ordered;
+    # collected once — the requested-vs-found diff and the targets both
+    # derive from this one result.
     with_data = (
         dim_study.join(fact.select("study_key"), on="study_key", how="left_semi")
         .orderBy("gse_accession")
     )
     if accessions:
-        requested = sorted(set(accessions))
-        with_data = with_data.where(F.col("gse_accession").isin(requested))
-        found = {r["gse_accession"] for r in with_data.collect()}
-        missing = sorted(set(requested) - found)  # O-26
-        if missing:
-            logger.warning("Requested studies without expression data: %s", missing)
-    else:
-        missing = []
-
+        with_data = with_data.where(F.col("gse_accession").isin(sorted(set(accessions))))
     targets = [(r["study_key"], r["gse_accession"]) for r in with_data.collect()]
+    missing = sorted(set(accessions or ()) - {acc for _, acc in targets})  # O-26
+    if missing:
+        logger.warning("Requested studies without expression data: %s", missing)
     if not targets:
         return CorrelationJobResult([], missing, {}, time.monotonic() - t0)
     target_keys = [k for k, _ in targets]
@@ -89,7 +86,10 @@ def run_correlation_job(
     expression = (
         fact.where(F.col("study_key").isin(target_keys))
         .join(
-            F.broadcast(dim_sample.select("sample_key", "gsm_accession")),
+            F.broadcast(
+                dim_sample.where(F.col("study_key").isin(target_keys))
+                .select("sample_key", "gsm_accession")
+            ),
             on="sample_key",
         )
         .select("study_key", "gene_key", "gsm_accession", "expression_value")

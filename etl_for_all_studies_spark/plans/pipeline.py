@@ -13,6 +13,26 @@ The reference's batch-commit + mid-file checkpoint resume machinery
 (O-8/O-9c/O-19/O-43) is intentionally replaced by idempotent, rerun-safe
 writes (anti-join dedup O-16 + atomic partition swaps) — same end state,
 Spark-native mechanism (SURVEY §7.4.4).
+
+Per-drop job budget. What a drop waits for is dominated by fixed per-job
+cost, not data work, so the plan keeps Spark actions to the ones that move
+data:
+
+* opening a study runs no job — the TSV schema is declared from the
+  driver-side header sniff, and warehouse reads declare the table schema;
+* the unioned metadata is persisted before the one batched collect that
+  feeds both the sample lists and the illness/platform dim candidates, so
+  the metadata TSVs parse once;
+* the small dims (study, illness, platform, gene) are driver-side
+  get-or-create merges (``operators/dims.py``): one collect reads their
+  existing keys, the distinct-gene collect that fills the expression cache
+  supplies the gene candidates, and a dim whose natural keys are all known
+  is **not rewritten** (an identical re-drop touches none of them);
+* ``dim_sample`` stays a distributed merge (it grows with the corpus), and
+  the fact append computes the fact plan once.
+
+A two-study drop into an existing warehouse runs 44 Spark jobs on
+``local[4]`` (``tests/test_drop_jobs.py`` pins the budget).
 """
 from __future__ import annotations
 
@@ -27,11 +47,13 @@ from pyspark.sql import functions as F
 from ..caching import CacheScope
 from ..config import AppConfig
 from ..operators.dims import (
+    SMALL_DIMS,
     build_dim_gene,
     build_dim_illness,
     build_dim_platform,
     build_dim_sample,
     build_dim_study,
+    collect_dim_keys,
 )
 from ..operators.expression import (
     _TEXT_MELT_THRESHOLD,
@@ -127,22 +149,22 @@ def run_pipeline(
     # per run, not once per downstream action.
     scope = CacheScope()
     try:
-        # Phase 2 — ONE batched collect of every study's sample list (the
-        # column-pruning driver metadata for O-14) instead of one job per study:
-        # plan construction stays O(1) Spark jobs as the study count grows.
-        # Cardinality is total samples (≤50k/study), same driver footprint as
-        # the per-study collects it replaces.
-        all_md = _union_all([md for _, _, md, _, _ in staged])
+        # Phase 2 — ONE batched collect of every study's sample rows instead
+        # of one job per study: the column-pruning driver metadata for O-14,
+        # and the illness/platform candidates of the small-dim merges. The
+        # union is persisted first, so this collect parses the metadata TSVs
+        # once and every later consumer (dim_sample, the DQ report) reads
+        # the cache. Cardinality is total samples (≤50k/study), the same
+        # driver footprint as the per-study collects it replaces.
+        all_md = scope.persist(_union_all([md for _, _, md, _, _ in staged]))
+        md_rows = all_md.select("gse_accession", "gsm_accession", "illness", "platform").collect()
         samples_by_study: dict[str, list[str]] = {}
-        for gse, gsm in (
-            all_md.select("gse_accession", "gsm_accession").distinct().collect()
-        ):
+        for gse, gsm, _, _ in md_rows:
             samples_by_study.setdefault(gse, []).append(gsm)
 
         # Phase 3 — per-study unpivot plans against the collected sample lists;
         # a study whose expression header shares no columns with its metadata is
         # quarantined here (ExpressionSchemaError), after the batch job.
-        metadata_parts: list[DataFrame] = []
         expression_parts: list[DataFrame] = []
         processed: list[str] = []
         for study_dir, accession, md, wide, expr_path in staged:
@@ -180,23 +202,20 @@ def run_pipeline(
                         gene_whitelist=genes,
                     )
                 expression_parts.append(long)
-                metadata_parts.append(md)
                 processed.append(accession)
             except Exception as exc:  # noqa: BLE001
                 logger.exception("Study %s failed; quarantined", study_dir)
                 failures.append(StudyFailure(study_dir, f"{type(exc).__name__}: {exc}"))
 
-        if not metadata_parts:
+        if not processed:
             return PipelineResult([], failures, 0, [], time.monotonic() - t0)
 
-        # both frames have several downstream consumers (metadata: five
-        # dim builds + the DQ report; expression: dim_gene + the fact
-        # build) and each consumer is its own action — without a
-        # barrier every action re-parses the wide TSVs (measured
-        # 60-80 s/scan at the 10k-sample envelope). Sizes are bounded:
-        # metadata by total samples, expression by whitelist-kept
+        # the expression frame has two consumers (the dim_gene candidates
+        # and the fact build), each its own action — without a barrier
+        # every action re-parses the wide TSVs (measured 60-80 s/scan at
+        # the 10k-sample envelope). Its size is bounded by whitelist-kept
         # cells (MEMORY_AND_DISK spills rather than evicts).
-        metadata = scope.persist(_union_all(metadata_parts))
+        metadata = all_md.where(F.col("gse_accession").isin(processed))
         expression = scope.persist(_union_all(expression_parts))
 
         # per-phase walls at INFO (O-48): at the wide-sample envelope the
@@ -210,32 +229,36 @@ def run_pipeline(
                 logger.info("phase %s: %.1fs", name, now - phase_t)
             phase_t = now
 
-        # -- dimension builds (existing keys preserved; O-46/O-47 set-at-a-time) --
-        dim_study = build_dim_study(wh.read("dim_study"), metadata)
-        wh.overwrite_dim("dim_study", dim_study)
-        dim_study = wh.read("dim_study")
-        _mark("dim_study")
+        # -- small-dimension merges on the driver (existing keys preserved;
+        # O-46 get-or-create). One job reads the four dims' keys; the
+        # distinct-gene collect also fills the expression cache. A dim
+        # that gained no key is not rewritten, but a missing one is still
+        # written (possibly empty), so every star-schema table exists.
+        existing = collect_dim_keys({t: wh.read(t) for t in SMALL_DIMS})
+        loaded = set(processed)
+        rows = [r for r in md_rows if r[0] in loaded]
+        gene_ids = [r[0] for r in expression.select("ensembl_id").distinct().collect()]
+        dims = {
+            "dim_study": build_dim_study(spark, existing["dim_study"], processed),
+            "dim_illness": build_dim_illness(spark, existing["dim_illness"], (r[2] for r in rows)),
+            "dim_platform": build_dim_platform(spark, existing["dim_platform"], (r[3] for r in rows)),
+            "dim_gene": build_dim_gene(spark, existing["dim_gene"], gene_ids),
+        }
+        for table, dim in dims.items():
+            if dim.changed or not wh.exists(table):
+                # one Parquet file per dim (the local frame spans cores)
+                wh.overwrite_dim(table, dim.frame.coalesce(1))
+        dim_study, dim_gene = dims["dim_study"].frame, dims["dim_gene"].frame
+        _mark("small_dims")
 
-        dim_illness = build_dim_illness(wh.read("dim_illness"), metadata)
-        wh.overwrite_dim("dim_illness", dim_illness)
-        dim_illness = wh.read("dim_illness")
-        _mark("dim_illness")
-
-        dim_platform = build_dim_platform(wh.read("dim_platform"), metadata)
-        wh.overwrite_dim("dim_platform", dim_platform)
-        dim_platform = wh.read("dim_platform")
-        _mark("dim_platform")
-
-        dim_gene = build_dim_gene(wh.read("dim_gene"), expression)
-        wh.overwrite_dim("dim_gene", dim_gene)
-        dim_gene = wh.read("dim_gene")
-        _mark("dim_gene")
-
+        # -- dim_sample: distributed merge, O-47 enrichment set-at-a-time --
         dim_sample = build_dim_sample(
-            wh.read("dim_sample"), metadata, dim_study, dim_illness, dim_platform
+            wh.read("dim_sample"), metadata, dim_study,
+            dims["dim_illness"].frame, dims["dim_platform"].frame,
         )
         wh.overwrite_dim("dim_sample", dim_sample)
-        dim_sample = wh.read("dim_sample")
+        study_keys = [dims["dim_study"].keys[a] for a in processed]
+        dim_sample = wh.read("dim_sample").where(F.col("study_key").isin(study_keys))
         _mark("dim_sample")
 
         # -- fact build: long expression × dims (broadcast probes, O-22/O-23) --

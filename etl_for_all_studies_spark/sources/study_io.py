@@ -4,12 +4,19 @@ whitelist (O-5).
 All three are plain ``spark.read.csv`` scans — header-driven, tab-delimited,
 all-string schema (types are applied downstream so bad cells can be dropped
 with DQ accounting rather than failing the scan; reference semantics
-``expression_processing.py:93-102``).
+``expression_processing.py:93-102``). The all-string schema is declared from
+the driver-side header sniff, so opening a file runs no Spark job; Spark's
+own header inference is the fallback for headers the sniff cannot vouch for.
 """
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from .warehouse import local_frame
 
 
 class InputFormatError(ValueError):
@@ -51,17 +58,49 @@ def sniff_header(path: str) -> list[str] | None:
         return None
 
 
+def spark_header_names(header: list[str], case_sensitive: bool = False) -> list[str]:
+    """The column names Spark's CSV reader derives from a header row
+    (``CSVDataSource.makeSafeHeader``): an empty cell becomes ``_c{i}``, and
+    every cell of a duplicated name — compared case-insensitively unless
+    ``spark.sql.caseSensitive`` — gets its index appended."""
+    fold = (lambda name: name) if case_sensitive else str.lower
+    seen = Counter(fold(name) for name in header if name)
+    return [
+        f"_c{i}" if not name else f"{name}{i}" if seen[fold(name)] > 1 else name
+        for i, name in enumerate(header)
+    ]
+
+
+def _declarable(header: list[str] | None) -> bool:
+    """Whether the sniffed first line is the row Spark would take as the
+    header, cell for cell. Quotes (univocity unquotes them), a BOM (the line
+    reader strips it), control characters (a bare CR is a line break to
+    Hadoop) and a blank first line (Spark skips it and takes the next) all
+    defer to Spark's inference."""
+    if header is None:
+        return False
+    line = "\t".join(header)
+    return bool(line.strip()) and not (
+        line.startswith("\ufeff")
+        or '"' in line
+        or any(c < " " and c != "\t" for c in line)
+    )
+
+
 def _read_tsv(spark: SparkSession, path: str) -> DataFrame:
     header = sniff_header(path)
-    max_cols = len(header) + 16 if header else _MAX_TSV_COLUMNS
-    return (
+    reader = (
         spark.read.option("sep", "\t")
         .option("header", True)
         .option("inferSchema", False)  # all strings; casts are explicit downstream
         .option("encoding", "UTF-8")
-        .option("maxColumns", max_cols)
-        .csv(path)
+        .option("maxColumns", len(header) + 16 if header else _MAX_TSV_COLUMNS)
     )
+    if _declarable(header):
+        case_sensitive = spark.conf.get("spark.sql.caseSensitive", "false") == "true"
+        names = spark_header_names(header, case_sensitive)
+        reader = reader.schema(T.StructType([T.StructField(n, T.StringType()) for n in names]))
+    return reader.csv(path)
 
 
 def read_metadata_raw(spark: SparkSession, path: str) -> DataFrame:
@@ -103,18 +142,17 @@ def read_gene_filter(spark: SparkSession, path: str) -> DataFrame:
     single-column DataFrame intended for a **broadcast semi-join** (O-13) —
     the whitelist is tiny (143 ids in the shipped file) while the expression
     side is the 100 TB side, so the filter must never shuffle the big side.
+    The ids are collected once (the validation needs that job anyway) into
+    a driver-built local frame, so every broadcast of it is job-free.
     """
     df = _read_tsv(spark, path)
     if "ensembl_id" not in df.columns:
         raise InputFormatError(f"Gene filter file missing 'ensembl_id' column: {path}")
-    genes = (
-        df.select(F.trim(F.col("ensembl_id")).alias("ensembl_id"))
-        .where(F.col("ensembl_id") != "")
-        .distinct()
-    )
-    if genes.limit(1).count() == 0:
+    ids = {r[0] for r in df.select(F.trim(F.col("ensembl_id"))).collect() if r[0]}
+    if not ids:
         raise InputFormatError(f"Gene filter file yielded zero gene ids: {path}")
-    return genes
+    schema = T.StructType([T.StructField("ensembl_id", T.StringType(), False)])
+    return local_frame(spark, schema, [(i,) for i in sorted(ids)])
 
 
 __all__ = [

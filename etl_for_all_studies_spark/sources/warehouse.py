@@ -16,18 +16,39 @@ columnar tables:
 
 Dimension rewrites go through a temp-path swap (write tmp → rename) so a dim
 can be rebuilt from a plan that reads its own previous version.
+
+Reads declare the table's schema (``schemas.TABLE_SCHEMAS``), so opening a
+table lists its files but runs no Parquet footer-inference job.
 """
 from __future__ import annotations
 
 import logging
 import time
+from collections.abc import Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..schemas import PARTITIONED_BY_STUDY, TABLE_SCHEMAS
 
 logger = logging.getLogger(__name__)
+
+
+def local_frame(spark: SparkSession, schema: T.StructType, rows: Sequence[tuple]) -> DataFrame:
+    """A driver-built DataFrame backed by an Arrow table: a ``LocalRelation``,
+    so broadcasting it runs no job and writing it runs exactly one.
+    (``createDataFrame`` on a Python list plans an RDD scan instead, and
+    every broadcast of it is a Python-worker job.)"""
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema=schema)
 
 
 class Warehouse:
@@ -91,13 +112,16 @@ class Warehouse:
         self._repair(table)
         if not self.exists(table):
             return None
-        return self.spark.read.parquet(self.path(table))
+        reader = self.spark.read
+        if table in TABLE_SCHEMAS:
+            reader = reader.schema(TABLE_SCHEMAS[table])
+        return reader.parquet(self.path(table))
 
     def read_or_empty(self, table: str) -> DataFrame:
         df = self.read(table)
         if df is not None:
             return df
-        return self.spark.createDataFrame([], TABLE_SCHEMAS[table])
+        return local_frame(self.spark, TABLE_SCHEMAS[table], [])
 
     # -- writes --
     def overwrite_dim(self, table: str, df: DataFrame) -> None:
@@ -126,27 +150,29 @@ class Warehouse:
 
         The anti-join's build side is only the *keys* of existing rows in the
         touched studies — with study-partition pruning this stays proportional
-        to the studies being loaded, not the whole warehouse. The new rows are
-        persisted once so the returned count and the write share one
-        computation (cheaper than re-scanning the table before/after).
+        to the studies being loaded, not the whole warehouse. The offered
+        rows are persisted before the touched-study collect, so the incoming
+        plan runs once; the new rows are persisted too, so the returned count
+        and the write share one anti-join.
         """
-        df = df.dropDuplicates(dedup_keys)
-        existing = self.read(table)
-        if existing is not None:
-            studies = [r[0] for r in df.select("study_key").distinct().collect()]
-            existing_keys = existing.where(F.col("study_key").isin(studies)).select(
-                *dedup_keys
-            )
-            df = df.join(existing_keys, on=dedup_keys, how="left_anti")
-        df = df.persist()
+        offered = df.dropDuplicates(dedup_keys).persist()
+        new = offered
         try:
-            written = df.count()
-            writer = df.write.mode("append")
+            existing = self.read(table)
+            if existing is not None:
+                studies = [r[0] for r in offered.select("study_key").distinct().collect()]
+                existing_keys = existing.where(F.col("study_key").isin(studies)).select(
+                    *dedup_keys
+                )
+                new = offered.join(existing_keys, on=dedup_keys, how="left_anti").persist()
+            written = new.count()
+            writer = new.write.mode("append")
             if table in PARTITIONED_BY_STUDY:
                 writer = writer.partitionBy("study_key")
             writer.parquet(self.path(table))
         finally:
-            df.unpersist()
+            new.unpersist()
+            offered.unpersist()
         return written
 
     def overwrite_study_partitions(

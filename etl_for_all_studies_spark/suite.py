@@ -7090,98 +7090,24 @@ QUERY_REGISTRY: dict[str, QueryDef] = {
     ),
 }
 
-# ROUND-11 ROTATION. The standing rule is CODE, not a comment:
-# ``tools/last_checked.json`` (regenerated per round by
-# ``tools/gen_last_checked.py`` from the CORRECTNESS_r*.json artifacts)
+# REGISTRY ROTATION (as of the r12 CORRECTNESS artifacts). The standing rule
+# is CODE, not a comment: ``tools/last_checked.json`` (regenerated per round
+# by ``tools/gen_last_checked.py`` from the CORRECTNESS_r*.json artifacts)
 # records each query's latest driver check, and
 # ``tests/test_registry_rotation.py`` asserts that the first-50 snapshot
 # window is exactly {never-checked} ∪ {ROTATION_MODIFIED} ∪ {the oldest-
 # checked remainder}, with the stale cohort ordered oldest-first.
 #
-# This round (VERDICT r10 #1): lead with the ONE new round-11 query (the
-# routed-LSH branch of the similarity-join router, closing its oracle gap —
-# VERDICT r10 #4), then the two round-11-modified plans, then the full
-# 33-query cohort last driver-checked in r8, then fill the window's 14
-# remaining slots with the oldest r9-checked entries. After this window
-# lands, no registry entry's latest check is older than r9.
-# ROTATION_MODIFIED holds the four entries whose round-11 diffs reach their
-# physical plans: dedup_jaccard_auto (slice widened from mod-4 to the full
-# table so the oracle hash has surface — VERDICT r10 wrong #3),
-# dedup_minhash_incr (the verify stage's shingle arrays now build behind a
-# candidate-id semi-join with a lineage-truncating checkpoint — ADVICE
-# r10), and dup_spans_incr / dup_spans_incr_keepfirst (the accrued-hash
-# probe is now restricted to the batch's own hash values through a
-# broadcast semi-join BEFORE the distinct, so history streams through the
-# probe instead of shuffling — identical results, new plan). Everything
-# else is a pure reorder: nothing renamed, dropped, or re-oracled.
-ROTATION_MODIFIED: list[str] = [
-    "dedup_jaccard_auto",
-    "dedup_minhash_incr",
-    "dup_spans_incr",
-    "dup_spans_incr_keepfirst",
-]
-_R11_NEW: list[str] = [
-    # round-11 addition — never driver-checked, head of the window
-    "dedup_jaccard_auto_lsh",
-]
-_R11_R8_COHORT: list[str] = [
-    # last checked r8 (CORRECTNESS_r08.json), prior relative order — the
-    # whole stale cohort fits the window this round (VERDICT r10 missing #1)
-    "events_auc",
-    "events_calibration",
-    "events_anomaly_expanding",
-    "classifier_score",
-    "splits_leakage_safe",
-    "corpus_shard",
-    "dedup_normalized",
-    "events_sessions_native",
-    "kmeans_embeddings",
-    "vocab_topk",
-    "events_scd2",
-    "value_deciles",
-    "skew_report",
-    "orders_above_avg",
-    "customer_set_ops",
-    "regional_revenue",
-    "cube_revenue",
-    "spearman_block",
-    "events_error_window",
-    "embedding_quantize",
-    "token_heavy_hitters",
-    "embedding_pipeline",
-    "sample_per_source",
-    "tfidf_similar",
-    "orders_snapshot_diff",
-    "semantic_decontam",
-    "dup_spans_rolling",
-    "spearman_suppliers",
-    "spearman_dense_auto",
-    "pricing_summary",
-    "star_join_revenue",
-    "whitelist_semi_join",
-    "anti_join_customers",
-]
-_R11_R9_FILL: list[str] = [
-    # last checked r9 — the first 14 complete the window, prior order
-    "dedup_jaccard_prefix",
-    "triangle_parts",
-    "small_qty_revenue",
-    "promo_revenue",
-    "high_balance_inactive",
-    "dedup_clusters_prefix",
-    "unpivot_part",
-    "props_normalize",
-    "dq_completion",
-    "nations_with_orders",
-    "average_rank",
-    "top_parts_per_brand",
-]
-_R11_R9_REST: list[str] = [
-    # displaced from the fill when ROTATION_MODIFIED grew to four (the
-    # window stays exactly 50): oldest-first continuity preserved
+# This rotation: every entry has been driver-checked (latest checks r9, r10
+# and r12) and no plan changed after its latest check, so ROTATION_MODIFIED
+# is empty. The whole r9 cohort leads, then the oldest r10 entries fill the
+# window's remaining 15 slots; the r12 cohort trails. Everything else is a
+# pure reorder: nothing renamed, dropped, or re-oracled.
+ROTATION_MODIFIED: list[str] = []
+_R9_COHORT: list[str] = [
+    # last checked r9, prior relative order — all inside the window
     "dedup_exact",
     "embedding_topk",
-    # last checked r9, prior relative order (outside the window)
     "embedding_ivf",
     "dedup_embedding",
     "dedup_embedding_ivf",
@@ -7216,9 +7142,8 @@ _R11_R9_REST: list[str] = [
     "decontaminate",
     "doc_repetition",
 ]
-_R11_R10_COHORT: list[str] = [
-    # last checked r10, prior relative order (dedup_jaccard_auto moved to
-    # ROTATION_MODIFIED)
+_R10_COHORT: list[str] = [
+    # last checked r10, prior relative order — the first 15 complete the window
     "doc_novelty",
     "dedup_editdist",
     "embedding_standardize",
@@ -7269,12 +7194,62 @@ _R11_R10_COHORT: list[str] = [
     "events_anomaly",
     "weighted_median",
 ]
-_R11_ORDER = (
-    _R11_NEW + ROTATION_MODIFIED + _R11_R8_COHORT + _R11_R9_FILL
-    + _R11_R9_REST + _R11_R10_COHORT
-)
-assert sorted(_R11_ORDER) == sorted(QUERY_REGISTRY), "rotation must be a pure reorder"
-QUERY_REGISTRY = {k: QUERY_REGISTRY[k] for k in _R11_ORDER}
+_R12_COHORT: list[str] = [
+    # last checked r12, prior relative order (outside the window)
+    "dedup_jaccard_auto_lsh",
+    "dedup_jaccard_auto",
+    "dedup_minhash_incr",
+    "dup_spans_incr",
+    "dup_spans_incr_keepfirst",
+    "events_auc",
+    "events_calibration",
+    "events_anomaly_expanding",
+    "classifier_score",
+    "splits_leakage_safe",
+    "corpus_shard",
+    "dedup_normalized",
+    "events_sessions_native",
+    "kmeans_embeddings",
+    "vocab_topk",
+    "events_scd2",
+    "value_deciles",
+    "skew_report",
+    "orders_above_avg",
+    "customer_set_ops",
+    "regional_revenue",
+    "cube_revenue",
+    "spearman_block",
+    "events_error_window",
+    "embedding_quantize",
+    "token_heavy_hitters",
+    "embedding_pipeline",
+    "sample_per_source",
+    "tfidf_similar",
+    "orders_snapshot_diff",
+    "semantic_decontam",
+    "dup_spans_rolling",
+    "spearman_suppliers",
+    "spearman_dense_auto",
+    "pricing_summary",
+    "star_join_revenue",
+    "whitelist_semi_join",
+    "anti_join_customers",
+    "dedup_jaccard_prefix",
+    "triangle_parts",
+    "small_qty_revenue",
+    "promo_revenue",
+    "high_balance_inactive",
+    "dedup_clusters_prefix",
+    "unpivot_part",
+    "props_normalize",
+    "dq_completion",
+    "nations_with_orders",
+    "average_rank",
+    "top_parts_per_brand",
+]
+_ROTATION_ORDER = ROTATION_MODIFIED + _R9_COHORT + _R10_COHORT + _R12_COHORT
+assert sorted(_ROTATION_ORDER) == sorted(QUERY_REGISTRY), "rotation must be a pure reorder"
+QUERY_REGISTRY = {k: QUERY_REGISTRY[k] for k in _ROTATION_ORDER}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

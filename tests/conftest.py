@@ -88,3 +88,23 @@ def app_config(study_tree):
             "spark": {"master": "local[4]", "shuffle_partitions": 4},
         }
     )
+
+
+@pytest.fixture()
+def count_jobs(spark):
+    """``count_jobs(fn)`` → ``(fn(), number of Spark jobs fn ran)``, counted
+    through a job group and ``statusTracker().getJobIdsForGroup``."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

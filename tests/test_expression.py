@@ -299,3 +299,44 @@ def test_sniff_header_non_utf8_falls_back(tmp_path, spark):
     # the Spark CSV scan still reads it leniently
     df = read_expression_wide(spark, str(p))
     assert df.count() == 1
+
+
+def _inferred_columns(spark, path):
+    """Spark's own header inference, for comparison with the sniffed schema."""
+    return (
+        spark.read.option("sep", "\t").option("header", True)
+        .option("encoding", "UTF-8").csv(str(path)).columns
+    )
+
+
+def test_read_tsv_sniffed_schema_matches_spark_header_names(tmp_path, spark, count_jobs):
+    """The schema declared from the sniffed header reproduces Spark's safe
+    header names — exact duplicates, case-insensitive duplicates and empty
+    cells — and opening the file runs no Spark job."""
+    from etl_for_all_studies_spark.sources.study_io import _read_tsv
+
+    p = tmp_path / "dups.tsv"
+    p.write_text("Gene\tS1\tS1\ts2\tS2\t\tS3\t\nENSG01\t1\t2\t3\t4\t5\t6\t7\n")
+    df, jobs = count_jobs(lambda: _read_tsv(spark, str(p)))
+    assert jobs == 0
+    assert df.columns == _inferred_columns(spark, p)
+    assert df.columns == ["Gene", "S11", "S12", "s23", "S24", "_c5", "S3", "_c7"]
+    assert [tuple(r) for r in df.collect()] == [("ENSG01", "1", "2", "3", "4", "5", "6", "7")]
+
+
+def test_read_tsv_falls_back_to_inference(tmp_path, spark, count_jobs):
+    """Headers the sniff cannot vouch for cell for cell — quoted, with a
+    BOM, not UTF-8 — take Spark's header inference (one job at open)."""
+    from etl_for_all_studies_spark.sources.study_io import _read_tsv
+
+    cases = {
+        "quoted.tsv": b'"Gene"\t"S1"\t"S 2"\nENSG01\t1\t2\n',
+        "bom.tsv": "﻿Gene\tS1\tS2\nENSG01\t1\t2\n".encode("utf-8"),
+        "latin1.tsv": b"Gene\tS\xe9ries\tS2\nENSG01\t1\t2\n",
+    }
+    for name, body in cases.items():
+        p = tmp_path / name
+        p.write_bytes(body)
+        df, jobs = count_jobs(lambda: _read_tsv(spark, str(p)))
+        assert jobs >= 1, f"{name}: expected the inference fallback"
+        assert df.columns == _inferred_columns(spark, p), name
